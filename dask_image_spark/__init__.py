@@ -29,7 +29,6 @@ Layout::
     operators/   the operator library (pure DataFrame -> DataFrame functions)
     queries/     driver-graded registry (queries() + oracle_sql() pairs)
     streaming/   Structured Streaming variants
-    plans/       plan-inspection helpers (explain capture, shuffle counting)
 """
 
 __version__ = "0.1.0"

@@ -3,9 +3,11 @@
 The reference normalizes kernels in ``dask_image/ndfilters/_utils.py``
 (``_get_size``, ``_get_footprint``, ``_get_origin``) and builds Gaussian taps
 inside scipy (``scipy.ndimage._filters._gaussian_kernel1d``, used by
-``dask_image/ndfilters/_gaussian.py::gaussian_filter``). Here a kernel is a
-plain list of ``(dy, dx, w)`` offsets — the broadcast side of every stencil
+``dask_image/ndfilters/_gaussian.py::gaussian_filter``). Here a kernel of
+rank N is a plain list of ``(d_0, ..., d_{N-1}, w)`` offsets, one integer
+displacement per axis plus a weight — the broadcast side of every stencil
 join — computed once on the driver (a few dozen floats; never data-sized).
+The named kernels below are the 2-D ones the ``ndfilters`` surface exposes.
 
 Separability: an N-D Gaussian/uniform filter is applied as per-axis 1-D
 passes (exactly the reference's structure), so a sigma-3 truncate-4 kernel
@@ -17,7 +19,20 @@ from __future__ import annotations
 
 import math
 
-Offset2D = tuple[int, int, float]
+# (d_0, ..., d_{N-1}, w): per-axis integer displacements, then the weight
+Offset = tuple[float, ...]
+
+
+def pixel_coords(shape, coords=None) -> list[str]:
+    """Coordinate columns of a rank-``len(shape)`` pixel table, in axis
+    order: the given ``coords``, else ``(y, x)`` / ``(z, y, x)`` by rank."""
+    if coords is None:
+        if len(shape) > 3:
+            raise ValueError(f"rank {len(shape)} needs explicit coords")
+        coords = ("z", "y", "x")[3 - len(shape):]
+    if len(coords) != len(shape):
+        raise ValueError(f"coords {tuple(coords)} do not match shape {tuple(shape)}")
+    return list(coords)
 
 
 def gaussian_taps_1d(
@@ -62,7 +77,7 @@ def gaussian_taps_1d(
 
 def taps_to_offsets_1d(
     taps: list[tuple[int, float]], axis: int
-) -> list[Offset2D]:
+) -> list[Offset]:
     """Lift 1-D taps into 2-D offsets along ``axis`` (0=y, 1=x)."""
     if axis == 0:
         return [(off, 0, w) for off, w in taps]
@@ -71,7 +86,7 @@ def taps_to_offsets_1d(
 
 def outer_kernel(
     ky: list[tuple[int, float]], kx: list[tuple[int, float]]
-) -> list[Offset2D]:
+) -> list[Offset]:
     """Full 2-D kernel as the outer product of two 1-D taps."""
     return [(dy, dx, wy * wx) for dy, wy in ky for dx, wx in kx]
 
@@ -89,15 +104,15 @@ def box_range(size: int) -> range:
     return range(lo, lo + size)
 
 
-def box_footprint(size: int) -> list[Offset2D]:
+def box_footprint(size: int) -> list[Offset]:
     """size×size all-ones footprint, scipy origin convention (even sizes OK)."""
     rng = box_range(size)
     return [(dy, dx, 1.0) for dy in rng for dx in rng]
 
 
-def flip(kernel: list[Offset2D]) -> list[Offset2D]:
+def flip(kernel: list[Offset]) -> list[Offset]:
     """Point-reflect a kernel: convolve(k) == correlate(flip(k))."""
-    return [(-dy, -dx, w) for dy, dx, w in kernel]
+    return [(*(-d for d in off[:-1]), off[-1]) for off in kernel]
 
 
 # Fixed edge/derivative kernels, correlate orientation, scipy-compatible:
@@ -107,17 +122,17 @@ _DERIV = [(-1, -1.0), (0, 0.0), (1, 1.0)]
 _SOBEL_SMOOTH = [(-1, 1.0), (0, 2.0), (1, 1.0)]
 _PREWITT_SMOOTH = [(-1, 1.0), (0, 1.0), (1, 1.0)]
 
-SOBEL_X: list[Offset2D] = outer_kernel(_SOBEL_SMOOTH, _DERIV)
-SOBEL_Y: list[Offset2D] = outer_kernel(_DERIV, _SOBEL_SMOOTH)
-PREWITT_X: list[Offset2D] = outer_kernel(_PREWITT_SMOOTH, _DERIV)
-PREWITT_Y: list[Offset2D] = outer_kernel(_DERIV, _PREWITT_SMOOTH)
-LAPLACE: list[Offset2D] = [
+SOBEL_X: list[Offset] = outer_kernel(_SOBEL_SMOOTH, _DERIV)
+SOBEL_Y: list[Offset] = outer_kernel(_DERIV, _SOBEL_SMOOTH)
+PREWITT_X: list[Offset] = outer_kernel(_PREWITT_SMOOTH, _DERIV)
+PREWITT_Y: list[Offset] = outer_kernel(_DERIV, _PREWITT_SMOOTH)
+LAPLACE: list[Offset] = [
     (0, 0, -4.0),
     (-1, 0, 1.0),
     (1, 0, 1.0),
     (0, -1, 1.0),
     (0, 1, 1.0),
 ]
-BOX3: list[Offset2D] = [
+BOX3: list[Offset] = [
     (dy, dx, 1.0 / 9.0) for dy in (-1, 0, 1) for dx in (-1, 0, 1)
 ]

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dask_image_spark.caching import persist_tracked
+from dask_image_spark.functions.kernels import pixel_coords
 
 _CUBIC_POLE = math.sqrt(3.0) - 2.0
 
@@ -136,37 +137,27 @@ def spline_filter1d(
 
 
 def _image_apply(px: DataFrame, np_fn, shape, keys=()) -> DataFrame:
-    """Apply ``np_fn(2d array) -> 2d array`` to each whole image group."""
+    """Apply ``np_fn(nd array) -> nd array`` to each whole image group of
+    rank ``len(shape)`` (coordinate columns ``(y, x)`` or ``(z, y, x)``)."""
     keys = list(keys)
-    h, w = shape
+    coords = pixel_coords(shape)
     schema = ", ".join(
-        [*(f"{k} long" for k in keys), "y int", "x int", "v double"]
+        [*(f"{k} long" for k in keys), *(f"{c} int" for c in coords), "v double"]
     )
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        img = np.zeros((h, w), dtype=np.float64)
-        img[pdf["y"].to_numpy(), pdf["x"].to_numpy()] = pdf["value"].to_numpy()
+        img = np.zeros(shape, dtype=np.float64)
+        img[tuple(pdf[c].to_numpy() for c in coords)] = pdf["value"].to_numpy()
         out = np_fn(img)
-        ys, xs = np.indices((h, w))
         res = pd.DataFrame(
-            {"y": ys.ravel(), "x": xs.ravel(), "v": out.ravel()}
+            {c: ix.ravel() for c, ix in zip(coords, np.indices(shape))}
         )
+        res["v"] = out.ravel()
         for k in keys:
             res[k] = pdf[k].iloc[0]
-        return res[[*keys, "y", "x", "v"]]
+        return res[[*keys, *coords, "v"]]
 
     grouped = px.groupBy(*keys) if keys else px.groupBy(F.lit(1).alias("_g"))
-    if not keys:
-        schema = "y int, x int, v double"
-
-        def fn_nokey(pdf: pd.DataFrame) -> pd.DataFrame:
-            img = np.zeros((h, w), dtype=np.float64)
-            img[pdf["y"].to_numpy(), pdf["x"].to_numpy()] = pdf["value"].to_numpy()
-            out = np_fn(img)
-            ys, xs = np.indices((h, w))
-            return pd.DataFrame({"y": ys.ravel(), "x": xs.ravel(), "v": out.ravel()})
-
-        return grouped.applyInPandas(fn_nokey, schema)
     return grouped.applyInPandas(fn, schema)
 
 
@@ -202,7 +193,7 @@ def map_overlap_tiles(
     keys = list(keys)
     if depth >= block:
         raise ValueError(f"depth {depth} must be < block {block}")
-    pad = padded_pixels(px, depth, shape, mode, cval, keys)  # keys,y,x,_pv
+    pad = padded_pixels(px, (depth, depth), shape, mode, cval, keys)  # keys,y,x,_pv
     side = block + 2 * depth
     # Tile assignment: pixel (y, x) belongs to exactly the tiles whose
     # padded window [t*block - depth, (t+1)*block + depth) contains it per
@@ -265,14 +256,15 @@ def map_overlap_tiles(
 def fourier_gaussian(px: DataFrame, sigma: float, shape, keys=()) -> DataFrame:
     """Gaussian in the frequency domain
     (``ndfourier/__init__.py::fourier_gaussian``): FFT, multiply by
-    exp(-2 pi^2 sigma^2 f^2) per axis, inverse FFT (real part).
+    exp(-2 pi^2 sigma^2 f^2) per axis, inverse FFT (real part). Any rank,
+    like upstream: ``shape`` is (h, w) or (d, h, w).
     Equivalent to spatial gaussian_filter with periodic (wrap) boundary."""
 
     def fn(img: np.ndarray) -> np.ndarray:
-        fy = np.fft.fftfreq(img.shape[0])[:, None]
-        fx = np.fft.fftfreq(img.shape[1])[None, :]
-        resp = np.exp(-2.0 * np.pi**2 * sigma**2 * (fy**2 + fx**2))
-        return np.real(np.fft.ifft2(np.fft.fft2(img) * resp))
+        freqs = map(np.fft.fftfreq, img.shape)
+        f2 = sum(f**2 for f in np.meshgrid(*freqs, indexing="ij", sparse=True))
+        resp = np.exp(-2.0 * np.pi**2 * sigma**2 * f2)
+        return np.real(np.fft.ifftn(np.fft.fftn(img) * resp))
 
     return _image_apply(px, fn, shape, keys)
 
@@ -368,39 +360,6 @@ def fourier_shift(px: DataFrame, shift, shape, keys=()) -> DataFrame:
         return np.real(np.fft.ifft2(np.fft.fft2(img) * ramp))
 
     return _image_apply(px, fn, shape, keys)
-
-
-def fourier_gaussian_3d(px: DataFrame, sigma: float, shape, keys=()) -> DataFrame:
-    """Rank-3 FFT-domain Gaussian — the fourier ops are rank-generic
-    upstream (``ndfourier`` accepts any dimensionality); this is the n-D
-    surface past 2-D. Same contract as the 2-D path: one whole-volume
-    numpy group per key, separable frequency response, real inverse."""
-    d, h, w = shape
-    keys = list(keys)
-    schema = ", ".join(
-        [*(f"{k} long" for k in keys), "z int", "y int", "x int", "v double"]
-    )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        img = np.zeros((d, h, w), dtype=np.float64)
-        img[
-            pdf["z"].to_numpy(), pdf["y"].to_numpy(), pdf["x"].to_numpy()
-        ] = pdf["value"].to_numpy()
-        fz = np.fft.fftfreq(d)[:, None, None]
-        fy = np.fft.fftfreq(h)[None, :, None]
-        fx = np.fft.fftfreq(w)[None, None, :]
-        resp = np.exp(-2.0 * np.pi**2 * sigma**2 * (fz**2 + fy**2 + fx**2))
-        out = np.real(np.fft.ifftn(np.fft.fftn(img) * resp))
-        zs, ys, xs = np.indices((d, h, w))
-        res = pd.DataFrame(
-            {"z": zs.ravel(), "y": ys.ravel(), "x": xs.ravel(), "v": out.ravel()}
-        )
-        for k in keys:
-            res[k] = pdf[k].iloc[0]
-        return res[[*keys, "z", "y", "x", "v"]]
-
-    grouped = px.groupBy(*keys) if keys else px.groupBy(F.lit(1).alias("_g"))
-    return grouped.applyInPandas(fn, schema)
 
 
 def edt_envelope_1d(f):

@@ -22,13 +22,19 @@ moves the same fan-out through exactly one shuffle, which is the difference
 at 100 TB.) Separable filters (Gaussian, uniform, prewitt/sobel) are applied
 as per-axis 1-D passes exactly like the reference.
 
+The template is rank-generic, like the reference's: the pad, the scatter
+and the aggregate take one radius per axis and a list of coordinate
+columns, so 2-D images, volumes and 4-D stacks share one plan shape.
+
 Boundary modes are shared-text SQL remaps (``functions.boundary``), so the
 DuckDB oracle and this engine cannot disagree on edge semantics.
 """
 
 from __future__ import annotations
 
+import itertools
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -36,29 +42,39 @@ from pyspark.sql import functions as F
 from dask_image_spark.functions import kernels as K
 from dask_image_spark.functions.boundary import remap_py
 
-Offset2D = tuple[int, int, float]
+
+def _radii(offsets: Sequence[K.Offset], shape: Sequence[int]) -> list[int]:
+    """Per-axis kernel radius, checked against that axis's extent. Every
+    offset must be ``(d_0, ..., d_{N-1}, w)`` for N = ``len(shape)``."""
+    if any(len(off) != len(shape) + 1 for off in offsets):
+        raise ValueError(
+            f"kernel offsets must have {len(shape) + 1} entries for shape {tuple(shape)}"
+        )
+    radii = [max(abs(int(off[i])) for off in offsets) for i in range(len(shape))]
+    for i, (r, n) in enumerate(zip(radii, shape)):
+        if r >= n:
+            raise ValueError(
+                f"kernel radius {r} >= image extent {n} on axis {i}: "
+                "single-bounce boundary remap would be invalid"
+            )
+    return radii
 
 
-def _kernel_inline(offsets: Sequence[Offset2D]) -> Column:
+def _kernel_inline(offsets: Sequence[K.Offset], coords: Sequence[str]) -> Column:
     """Kernel fan-out as ``inline(array(struct...))`` — a literal-array
     explode that stays inside WholeStageCodegen, ~25% faster than a
     broadcast-nested-loop cross join against a kernel table. ``ko`` is the
     offset's ordinal, used by generic_filter to present window values in
-    kernel (raster) order."""
+    kernel (raster) order; ``d<coord>`` is the displacement along each axis."""
     structs = [
         F.struct(
             F.lit(i).alias("ko"),
-            F.lit(int(dy)).alias("dy"),
-            F.lit(int(dx)).alias("dx"),
-            F.lit(float(w)).alias("w"),
+            *[F.lit(int(d)).alias(f"d{c}") for d, c in zip(off, coords)],
+            F.lit(float(off[-1])).alias("w"),
         )
-        for i, (dy, dx, w) in enumerate(offsets)
+        for i, off in enumerate(offsets)
     ]
     return F.inline(F.array(*structs))
-
-
-def _max_radius(offsets: Sequence[Offset2D]) -> int:
-    return max(max(abs(dy), abs(dx)) for dy, dx, _ in offsets)
 
 
 def _pad_pairs(n: int, r: int, mode: str) -> list[tuple[int, int]]:
@@ -89,270 +105,163 @@ def _edge_pred(pairs: list[tuple[int, int]], col: str):
 
 def padded_pixels(
     px: DataFrame,
-    r: int,
-    shape: tuple[int, int],
+    radii: Sequence[int],
+    shape: Sequence[int],
     mode: str,
     cval: float,
-    keys: Sequence[str],
+    keys: Sequence[str] = (),
     value_col: str = "value",
+    coords: Sequence[str] | None = None,
 ) -> DataFrame:
-    """Pixels extended to the halo range [-r, h+r) x [-r, w+r).
+    """Pixels extended to the halo box [-r_i, n_i + r_i) on every axis i
+    with radius ``radii[i]``; axes of radius 0 are not padded.
 
     Non-constant modes: border rows are copies of edge pixels selected via
-    broadcast pad-map joins (the Spark analog of dask's halo exchange); the
-    branches carry an edge predicate so their scans prune. Constant mode:
-    out-of-range coordinate strips filled with ``cval``.
+    broadcast pad-map joins (the Spark analog of dask's halo exchange), one
+    branch per non-empty subset of padded axes (2-D: the y border, the x
+    border and the corners). Each branch carries the edge predicates of its
+    axes, so its scan prunes to the edges. Constant mode: the box minus the
+    body as one ``cval`` strip per padded axis i — axis i out of range, the
+    axes before it in range, the axes after it over their padded range —
+    built from ``spark.range`` cross joins (no data scan).
     """
-    h, w_dim = shape
+    coords = K.pixel_coords(shape, coords)
     keys = list(keys)
     spark = px.sparkSession
-    vtype = px.schema[value_col].dataType.simpleString()
-    body = px.select(*keys, "y", "x", F.col(value_col).alias("_pv"))
-    if r <= 0:
+    body = px.select(*keys, *coords, F.col(value_col).alias("_pv"))
+    axes = [i for i, r in enumerate(radii) if r > 0]
+    if not axes:
         return body
 
     if mode == "constant":
+        vtype = px.schema[value_col].dataType.simpleString()
         fill = F.lit(cval).cast(vtype).alias("_pv")
 
         def _rng(lo, hi, name):
             return spark.range(lo, hi).select(F.col("id").cast("int").alias(name))
 
-        ys_out = _rng(-r, 0, "y").union(_rng(h, h + r, "y"))
-        xs_out = _rng(-r, 0, "x").union(_rng(w_dim, w_dim + r, "x"))
-        strips = ys_out.crossJoin(_rng(-r, w_dim + r, "x")).union(
-            _rng(0, h, "y").crossJoin(xs_out)
+        def _seg(j, i):
+            r, n, c = radii[j], shape[j], coords[j]
+            if j == i:
+                return _rng(-r, 0, c).union(_rng(n, n + r, c))
+            return _rng(0, n, c) if j < i else _rng(-r, n + r, c)
+
+        strips = reduce(
+            DataFrame.union,
+            [
+                reduce(DataFrame.crossJoin, [_seg(j, i) for j in range(len(coords))])
+                for i in axes
+            ],
         )
-        if keys:
-            strips = px.select(*keys).distinct().crossJoin(strips)
-        return body.unionByName(strips.select(*keys, "y", "x", fill))
-
-    ypairs = _pad_pairs(h, r, mode)
-    xpairs = _pad_pairs(w_dim, r, mode)
-    pady = F.broadcast(_pad_map(spark, ypairs).withColumnsRenamed({"src": "ysrc", "pad": "ypad"}))
-    padx = F.broadcast(_pad_map(spark, xpairs).withColumnsRenamed({"src": "xsrc", "pad": "xpad"}))
-    # restrict border branches to the rows the pad maps can actually source —
-    # a real, pushdown-able range predicate, so those scans prune to the edges
-    y_edge = body.filter(_edge_pred(ypairs, "y"))
-    x_edge = body.filter(_edge_pred(xpairs, "x"))
-    ypad_rows = y_edge.join(pady, F.col("y") == F.col("ysrc")).select(
-        *keys, F.col("ypad").alias("y"), "x", "_pv"
-    )
-    xpad_rows = x_edge.join(padx, F.col("x") == F.col("xsrc")).select(
-        *keys, "y", F.col("xpad").alias("x"), "_pv"
-    )
-    corner_rows = (
-        y_edge.filter(_edge_pred(xpairs, "x"))
-        .join(pady, F.col("y") == F.col("ysrc"))
-        .join(padx, F.col("x") == F.col("xsrc"))
-        .select(*keys, F.col("ypad").alias("y"), F.col("xpad").alias("x"), "_pv")
-    )
-    return body.unionByName(ypad_rows).unionByName(xpad_rows).unionByName(corner_rows)
-
-
-def stencil_gather(
-    px: DataFrame,
-    offsets: Sequence[Offset2D],
-    shape: tuple[int, int],
-    mode: str = "reflect",
-    cval: float = 0.0,
-    keys: Sequence[str] = (),
-    value_col: str = "value",
-    drop_zero_pad: bool = False,
-) -> DataFrame:
-    """Neighborhood gather: one row per (output pixel, kernel offset).
-
-    Returns columns ``*keys, y, x, ko, w, v`` where ``v`` is the
-    boundary-resolved neighbor value. All filter aggregations are GROUP BYs
-    over this. Physically it is a scatter — each padded pixel is fanned to
-    the outputs that read it (target = coord - offset) — so no join against
-    the pixel table is ever needed and the groupBy is the only shuffle.
-
-    ``drop_zero_pad``: valid ONLY for linear (SUM-like) aggregations with
-    ``mode='constant', cval=0`` — out-of-image terms contribute zero, so
-    the border rows are omitted instead of materialized. Order-statistic
-    aggregations (min/median/rank) must keep them.
-    """
-    h, w_dim = shape
-    r = _max_radius(offsets)
-    if r >= min(h, w_dim):
-        raise ValueError(
-            f"kernel radius {r} >= image extent {min(h, w_dim)}: "
-            "single-bounce boundary remap would be invalid"
-        )
-    keys = list(keys)
-    if drop_zero_pad and mode == "constant" and cval == 0.0:
-        pad = px.select(*keys, "y", "x", F.col(value_col).alias("_pv"))
-    else:
-        pad = padded_pixels(px, r, shape, mode, cval, keys, value_col)
-    oy = (F.col("y") - F.col("dy")).alias("oy")
-    ox = (F.col("x") - F.col("dx")).alias("ox")
-    return (
-        pad.select(*keys, "y", "x", "_pv", _kernel_inline(offsets))
-        .select(*keys, oy, ox, "ko", "w", F.col("_pv").alias("v"))
-        .filter(
-            (F.col("oy") >= 0) & (F.col("oy") < h)
-            & (F.col("ox") >= 0) & (F.col("ox") < w_dim)
-        )
-        .withColumnsRenamed({"oy": "y", "ox": "x"})
-    )
-
-
-def _agg_stencil(
-    px: DataFrame,
-    offsets: Sequence[Offset2D],
-    agg: Column,
-    shape: tuple[int, int],
-    mode: str,
-    cval: float,
-    keys: Sequence[str],
-    value_col: str = "value",
-    out_col: str = "v",
-    drop_zero_pad: bool = False,
-) -> DataFrame:
-    g = stencil_gather(
-        px, offsets, shape, mode, cval, keys, value_col, drop_zero_pad
-    )
-    return g.groupBy(*keys, "y", "x").agg(agg.alias(out_col))
-
-
-# --- N-dimensional generalization -------------------------------------------
-#
-# The 2-D template above is the tuned hot path; this section generalizes
-# pad-then-scatter to arbitrary rank (the reference is an N-D library —
-# every dask-image filter takes any-rank arrays). Border branches: one per
-# non-empty subset of axes (2^N - 1; the 2-D code's ypad/xpad/corner is the
-# N=2 instance), each a broadcast pad-map join under a pushable edge
-# predicate. Scatter + single groupBy shuffle as in 2-D.
-
-
-def padded_pixels_nd(
-    px: DataFrame,
-    radii: Sequence[int],
-    shape: Sequence[int],
-    mode: str,
-    cval: float,
-    coords: Sequence[str],
-    keys: Sequence[str] = (),
-    value_col: str = "value",
-) -> DataFrame:
-    import itertools
-
-    keys = list(keys)
-    coords = list(coords)
-    spark = px.sparkSession
-    body = px.select(*keys, *coords, F.col(value_col).alias("_pv"))
-    if mode == "constant":
-        # The padded box minus the body decomposes disjointly by which axis
-        # subset is out-of-range: for each non-empty subset S, axes in S take
-        # their two out-of-range segments, axes outside S their in-range
-        # segment. Strips are built from spark.range cross joins — pure
-        # coordinate generation, no data scan, O(surface * radius) rows.
-        vtype = px.schema[value_col].dataType.simpleString()
-        fill = F.lit(cval).cast(vtype).alias("_pv")
-
-        def _rng(lo, hi, name):
-            return spark.range(lo, hi).select(
-                F.col("id").cast("int").alias(name)
-            )
-
-        const_axes = [i for i, r in enumerate(radii) if r > 0]
-        strips = None
-        for subset_size in range(1, len(const_axes) + 1):
-            for subset in itertools.combinations(const_axes, subset_size):
-                branch = None
-                for i, c in enumerate(coords):
-                    if i in subset:
-                        seg = _rng(-radii[i], 0, c).union(
-                            _rng(shape[i], shape[i] + radii[i], c)
-                        )
-                    else:
-                        seg = _rng(0, shape[i], c)
-                    branch = seg if branch is None else branch.crossJoin(seg)
-                strips = branch if strips is None else strips.union(branch)
-        if strips is None:
-            # zero-radius kernel (center tap only): nothing out of range
-            return body
         if keys:
             strips = px.select(*keys).distinct().crossJoin(strips)
         return body.unionByName(strips.select(*keys, *coords, fill))
-    axes = [i for i, r in enumerate(radii) if r > 0]
+
     pairs = {i: _pad_pairs(shape[i], radii[i], mode) for i in axes}
+    maps = {
+        i: F.broadcast(
+            _pad_map(spark, pairs[i]).withColumnsRenamed(
+                {"src": f"{coords[i]}src", "pad": f"{coords[i]}pad"}
+            )
+        )
+        for i in axes
+    }
     out = body
-    for subset_size in range(1, len(axes) + 1):
-        for subset in itertools.combinations(axes, subset_size):
+    for size in range(1, len(axes) + 1):
+        for subset in itertools.combinations(axes, size):
             branch = body
             for i in subset:
                 branch = branch.filter(_edge_pred(pairs[i], coords[i]))
             for i in subset:
-                pm = F.broadcast(
-                    _pad_map(spark, pairs[i]).withColumnsRenamed(
-                        {"src": f"_s{i}", "pad": f"_p{i}"}
-                    )
-                )
-                branch = branch.join(pm, F.col(coords[i]) == F.col(f"_s{i}"))
+                branch = branch.join(maps[i], F.col(coords[i]) == F.col(f"{coords[i]}src"))
             sel = [
-                (F.col(f"_p{i}").alias(c) if i in subset else F.col(c))
+                F.col(f"{c}pad").alias(c) if i in subset else F.col(c)
                 for i, c in enumerate(coords)
             ]
             out = out.unionByName(branch.select(*keys, *sel, "_pv"))
     return out
 
 
-def correlate_nd(
+def stencil_gather(
     px: DataFrame,
-    offsets: Sequence[tuple],
+    offsets: Sequence[K.Offset],
     shape: Sequence[int],
     mode: str = "reflect",
     cval: float = 0.0,
-    coords: Sequence[str] = ("z", "y", "x"),
     keys: Sequence[str] = (),
+    value_col: str = "value",
+    drop_zero_pad: bool = False,
+    coords: Sequence[str] | None = None,
 ) -> DataFrame:
-    """N-D cross-correlation: ``offsets`` rows are (d_0, ..., d_{N-1}, w)
-    matching ``coords`` order. Same single-shuffle pad-scatter plan as 2-D."""
-    coords = list(coords)
+    """Neighborhood gather: one row per (output pixel, kernel offset).
+
+    Returns columns ``*keys, *coords, ko, w, v`` where ``v`` is the
+    boundary-resolved neighbor value. All filter aggregations are GROUP BYs
+    over this. Physically it is a scatter — each padded pixel is fanned to
+    the outputs that read it (target = coord - offset) — so no join against
+    the pixel table is ever needed and the groupBy is the only shuffle.
+    Any rank: ``offsets`` rows are ``(d_0, ..., d_{N-1}, w)`` in ``coords``
+    order (default ``(y, x)`` / ``(z, y, x)`` by ``len(shape)``).
+
+    ``drop_zero_pad``: valid ONLY for linear (SUM-like) aggregations with
+    ``mode='constant', cval=0`` — out-of-image terms contribute zero, so
+    the border rows are omitted instead of materialized. Order-statistic
+    aggregations (min/median/rank) must keep them.
+    """
+    radii = _radii(offsets, shape)
+    coords = K.pixel_coords(shape, coords)
     keys = list(keys)
-    n = len(coords)
-    radii = [
-        max(abs(off[i]) for off in offsets) for i in range(n)
+    if drop_zero_pad and mode == "constant" and cval == 0.0:
+        radii = [0] * len(radii)  # zero-valued border rows: not materialized
+    pad = padded_pixels(px, radii, shape, mode, cval, keys, value_col, coords)
+    targets = [(F.col(c) - F.col(f"d{c}")).alias(f"o{c}") for c in coords]
+    in_bounds = [
+        cond
+        for c, n in zip(coords, shape)
+        for cond in (F.col(f"o{c}") >= 0, F.col(f"o{c}") < n)
     ]
-    for i, r in enumerate(radii):
-        if r >= shape[i]:
-            raise ValueError(f"kernel radius {r} >= extent {shape[i]} on axis {i}")
-    pad = padded_pixels_nd(px, radii, shape, mode, cval, coords, keys)
-    structs = [
-        F.struct(
-            *[F.lit(int(off[i])).alias(f"_d{i}") for i in range(n)],
-            F.lit(float(off[n])).alias("_w"),
-        )
-        for off in offsets
-    ]
-    scat = pad.select(*keys, *coords, "_pv", F.inline(F.array(*structs)))
-    targets = [
-        (F.col(c) - F.col(f"_d{i}")).alias(f"_t{i}")
-        for i, c in enumerate(coords)
-    ]
-    scat = scat.select(
-        *keys, *targets, (F.col("_pv") * F.col("_w")).alias("_wv")
+    return (
+        pad.select(*keys, *coords, "_pv", _kernel_inline(offsets, coords))
+        .select(*keys, *targets, "ko", "w", F.col("_pv").alias("v"))
+        .filter(reduce(Column.__and__, in_bounds))
+        .withColumnsRenamed({f"o{c}": c for c in coords})
     )
-    for i, c in enumerate(coords):
-        scat = scat.filter((F.col(f"_t{i}") >= 0) & (F.col(f"_t{i}") < shape[i]))
-    renamed = scat.withColumnsRenamed({f"_t{i}": c for i, c in enumerate(coords)})
-    return renamed.groupBy(*keys, *coords).agg(F.sum("_wv").alias("v"))
+
+
+def _agg_stencil(
+    px: DataFrame,
+    offsets: Sequence[K.Offset],
+    agg: Column,
+    shape: Sequence[int],
+    mode: str,
+    cval: float,
+    keys: Sequence[str],
+    value_col: str = "value",
+    out_col: str = "v",
+    drop_zero_pad: bool = False,
+    coords: Sequence[str] | None = None,
+) -> DataFrame:
+    coords = K.pixel_coords(shape, coords)
+    g = stencil_gather(
+        px, offsets, shape, mode, cval, keys, value_col, drop_zero_pad, coords
+    )
+    return g.groupBy(*keys, *coords).agg(agg.alias(out_col))
 
 
 # --- the public ndfilters surface -------------------------------------------
 
 
-def correlate(px, weights, shape, mode="reflect", cval=0.0, keys=()):
-    """Cross-correlation with an offset kernel (``ndfilters/_conv.py``).
+def correlate(px, weights, shape, mode="reflect", cval=0.0, keys=(), coords=None):
+    """Cross-correlation with an offset kernel (``ndfilters/_conv.py``), any
+    rank: ``weights`` rows are ``(d_0, ..., d_{N-1}, w)`` in ``coords`` order.
 
     constant/cval=0 skips border materialization (zero terms drop out of the
-    SUM); requires the kernel to contain offset (0,0) so every in-bounds
+    SUM); requires the kernel to contain the zero offset so every in-bounds
     output keeps at least its self-term row."""
-    has_center = any(dy == 0 and dx == 0 for dy, dx, _ in weights)
+    has_center = any(not any(off[:-1]) for off in weights)
     return _agg_stencil(
         px, weights, F.sum(F.col("v") * F.col("w")), shape, mode, cval, keys,
-        drop_zero_pad=has_center,
+        drop_zero_pad=has_center, coords=coords,
     )
 
 
@@ -463,8 +372,8 @@ def gaussian_filter(
     for axis in (0, 1):
         taps = K.gaussian_taps_1d(sigmas[axis], orders[axis], truncate)
         # NOTE (chained-stencil recompute rule, SCALE.md imaging section):
-        # pass 2's non-constant padding references pass 1 from body + edge
-        # + corner union branches. An operator-internal cache() here was
+        # pass 2's non-constant padding references pass 1 from the body
+        # and the pass's one edge branch (a 1-D pass pads only its axis). An operator-internal cache() here was
         # measured a NET LOSS across the suite: it costs ~0.3 s of fixed
         # materialization on every single-reference consumer (edge_canny
         # 2.18 -> 2.50 s) and only pays when the CALLER re-references the

@@ -16,19 +16,35 @@ the transform maps an output partition to a bounded input region.
 
 from __future__ import annotations
 
+import itertools
+from functools import reduce
+from operator import add, mul
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dask_image_spark.functions.boundary import remap_sql
+from dask_image_spark.functions.kernels import pixel_coords
 from dask_image_spark.functions.localrel import values_df
 
 
-def _src_exprs(matrix, offset):
-    (m00, m01), (m10, m11) = matrix
-    o0, o1 = offset
-    fy = F.lit(float(m00)) * F.col("y") + F.lit(float(m01)) * F.col("x") + F.lit(float(o0))
-    fx = F.lit(float(m10)) * F.col("y") + F.lit(float(m11)) * F.col("x") + F.lit(float(o1))
-    return fy, fx
+def _src_exprs(matrix, offset, coords=("y", "x")):
+    """Source coordinate per axis: ``f_i = sum_j M[i][j] * c_j + o_i``.
+    ``matrix`` must be N x N and ``offset`` (default zeros) of length N,
+    for N = ``len(coords)``."""
+    n = len(coords)
+    if offset is None:
+        offset = (0.0,) * n
+    if len(matrix) != n or any(len(row) != n for row in matrix) or len(offset) != n:
+        raise ValueError(
+            f"affine matrix/offset do not match rank {n}: "
+            f"{len(matrix)} rows, offset of length {len(offset)}"
+        )
+    return [
+        reduce(add, [F.lit(float(m)) * F.col(c) for m, c in zip(row, coords)])
+        + F.lit(float(o))
+        for row, o in zip(matrix, offset)
+    ]
 
 
 def affine_transform_order0(
@@ -77,53 +93,55 @@ def affine_transform_order0(
 
 
 def affine_transform_order1(
-    px: DataFrame, matrix, offset=(0.0, 0.0), shape=None, keys=(),
+    px: DataFrame, matrix, offset=None, shape=None, keys=(),
     mode: str = "nearest", cval: float = 0.0,
 ) -> DataFrame:
-    """Bilinear affine: join the 4 corner pixels with weights
-    (1-ty/ty) x (1-tx/tx) computed in SQL. ``mode`` handles the upstream
-    out-of-range surface exactly as :func:`affine_transform_order0` —
-    coordinate remap for the symmetric/periodic modes, left-join +
+    """Multilinear affine, any rank: join the 2^N corner pixels with weights
+    prod_i (1-t_i or t_i) computed in SQL (2-D: bilinear, 3-D: trilinear).
+    ``matrix`` is N x N over the ``(y, x)`` / ``(z, y, x)`` columns, N =
+    ``len(shape)``; ``offset`` defaults to zeros. ``mode`` handles the
+    upstream out-of-range surface exactly as :func:`affine_transform_order0`
+    — coordinate remap for the symmetric/periodic modes, left-join +
     ``coalesce(sv, cval)`` per corner for ``constant``."""
     keys = list(keys)
-    h, w = shape
-    fy, fx = _src_exprs(matrix, offset)
+    coords = pixel_coords(shape)
     spark = px.sparkSession
-    corners = values_df(spark, "cy, cx", [(0, 0), (0, 1), (1, 0), (1, 1)])
-    base = px.select(*keys, "y", "x").withColumns(
-        {"fy": fy, "fx": fx}
+    corners = values_df(
+        spark, ", ".join(f"c{c}" for c in coords),
+        list(itertools.product((0, 1), repeat=len(coords))),
+    )
+    base = px.select(*keys, *coords).withColumns(
+        {f"f{c}": f for c, f in zip(coords, _src_exprs(matrix, offset, coords))}
     ).withColumns(
         {
-            "y0": F.floor(F.col("fy")).cast("int"),
-            "x0": F.floor(F.col("fx")).cast("int"),
-            "ty": F.col("fy") - F.floor(F.col("fy")),
-            "tx": F.col("fx") - F.floor(F.col("fx")),
+            **{f"{c}0": F.floor(F.col(f"f{c}")).cast("int") for c in coords},
+            **{f"t{c}": F.col(f"f{c}") - F.floor(F.col(f"f{c}")) for c in coords},
         }
     )
     remap = "constant" if mode == "constant" else mode
     j = base.crossJoin(F.broadcast(corners)).withColumns(
         {
-            "ry": F.col("y0") + F.col("cy"),
-            "rx": F.col("x0") + F.col("cx"),
-            "wgt": (
-                F.when(F.col("cy") == 0, 1 - F.col("ty")).otherwise(F.col("ty"))
-                * F.when(F.col("cx") == 0, 1 - F.col("tx")).otherwise(F.col("tx"))
-            ),
+            **{f"r{c}": F.col(f"{c}0") + F.col(f"c{c}") for c in coords},
+            "wgt": reduce(mul, [
+                F.when(F.col(f"c{c}") == 0, 1 - F.col(f"t{c}")).otherwise(F.col(f"t{c}"))
+                for c in coords
+            ]),
         }
     ).withColumns(
         {
-            "sy": F.expr(remap_sql("ry", h, remap)).cast("int"),
-            "sx": F.expr(remap_sql("rx", w, remap)).cast("int"),
+            f"s{c}": F.expr(remap_sql(f"r{c}", n, remap)).cast("int")
+            for c, n in zip(coords, shape)
         }
     )
     src = px.select(
-        *keys, F.col("y").alias("sy"), F.col("x").alias("sx"),
+        *keys, *[F.col(c).alias(f"s{c}") for c in coords],
         F.col("value").alias("sv"),
     )
+    on = [*keys, *(f"s{c}" for c in coords)]
     if mode == "constant":
         return (
-            j.join(src, on=[*keys, "sy", "sx"], how="left")
-            .groupBy(*keys, "y", "x")
+            j.join(src, on=on, how="left")
+            .groupBy(*keys, *coords)
             .agg(
                 F.sum(
                     F.col("wgt")
@@ -132,8 +150,8 @@ def affine_transform_order1(
             )
         )
     return (
-        j.join(src, on=[*keys, "sy", "sx"])
-        .groupBy(*keys, "y", "x")
+        j.join(src, on=on)
+        .groupBy(*keys, *coords)
         .agg(F.sum(F.col("wgt") * F.col("sv")).alias("v"))
     )
 
@@ -363,57 +381,3 @@ def shift_wrap(px: DataFrame, shift, shape, keys=()) -> DataFrame:
         F.pmod(F.col("x") + F.lit(int(sx)), F.lit(w)).cast("int").alias("_ox"),
         F.col("value").alias("v"),
     ).select(*keys, F.col("_oy").alias("y"), F.col("_ox").alias("x"), "v")
-
-
-def affine_transform_order1_3d(
-    px: DataFrame, diag, offset, shape, keys=(),
-) -> DataFrame:
-    """Rank-3 trilinear affine (diagonal matrix + offset) — the n-D surface
-    of the gather-join pattern: 8 corner pixels via a broadcast corner
-    table, weights as the product of three 1-D lerp terms, clamped
-    (nearest) at edges. Same single-shuffle shape as the 2-D form."""
-    keys = list(keys)
-    d, h, w = shape
-    mz, my, mx = diag
-    oz, oy, ox = offset
-    spark = px.sparkSession
-    corners = values_df(
-        spark, "cz, cy, cx",
-        [(a, b, c) for a in (0, 1) for b in (0, 1) for c in (0, 1)],
-    )
-    fz = F.lit(float(mz)) * F.col("z") + F.lit(float(oz))
-    fy = F.lit(float(my)) * F.col("y") + F.lit(float(oy))
-    fx = F.lit(float(mx)) * F.col("x") + F.lit(float(ox))
-    base = px.select(*keys, "z", "y", "x").withColumns(
-        {"fz": fz, "fy": fy, "fx": fx}
-    ).withColumns(
-        {
-            "z0": F.floor(F.col("fz")).cast("int"),
-            "y0": F.floor(F.col("fy")).cast("int"),
-            "x0": F.floor(F.col("fx")).cast("int"),
-            "tz": F.col("fz") - F.floor(F.col("fz")),
-            "ty": F.col("fy") - F.floor(F.col("fy")),
-            "tx": F.col("fx") - F.floor(F.col("fx")),
-        }
-    )
-    j = base.crossJoin(F.broadcast(corners)).withColumns(
-        {
-            "sz": F.least(F.greatest(F.col("z0") + F.col("cz"), F.lit(0)), F.lit(d - 1)),
-            "sy": F.least(F.greatest(F.col("y0") + F.col("cy"), F.lit(0)), F.lit(h - 1)),
-            "sx": F.least(F.greatest(F.col("x0") + F.col("cx"), F.lit(0)), F.lit(w - 1)),
-            "wgt": (
-                F.when(F.col("cz") == 0, 1 - F.col("tz")).otherwise(F.col("tz"))
-                * F.when(F.col("cy") == 0, 1 - F.col("ty")).otherwise(F.col("ty"))
-                * F.when(F.col("cx") == 0, 1 - F.col("tx")).otherwise(F.col("tx"))
-            ),
-        }
-    )
-    src = px.select(
-        *keys, F.col("z").alias("sz"), F.col("y").alias("sy"),
-        F.col("x").alias("sx"), F.col("value").alias("sv"),
-    )
-    return (
-        j.join(src, on=[*keys, "sz", "sy", "sx"])
-        .groupBy(*keys, "z", "y", "x")
-        .agg(F.sum(F.col("wgt") * F.col("sv")).alias("v"))
-    )

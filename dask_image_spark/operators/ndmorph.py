@@ -22,20 +22,19 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dask_image_spark.functions.kernels import Offset
 from dask_image_spark.operators.ndfilters import stencil_gather
 
-Offset2D = tuple[int, int, float]
-
 # scipy default structure: generate_binary_structure(2, 1) — the 4-connected cross.
-CROSS: list[Offset2D] = [(0, 0, 1.0), (-1, 0, 1.0), (1, 0, 1.0), (0, -1, 1.0), (0, 1, 1.0)]
-SQUARE: list[Offset2D] = [
+CROSS: list[Offset] = [(0, 0, 1.0), (-1, 0, 1.0), (1, 0, 1.0), (0, -1, 1.0), (0, 1, 1.0)]
+SQUARE: list[Offset] = [
     (dy, dx, 1.0) for dy in (-1, 0, 1) for dx in (-1, 0, 1)
 ]
 
 
 def _binary_pass(
     mask: DataFrame,
-    structure: Sequence[Offset2D],
+    structure: Sequence[Offset],
     shape: tuple[int, int],
     border_value: bool,
     agg,
@@ -56,7 +55,7 @@ _UNIT_CROSS = frozenset((dy, dx) for dy, dx, _ in CROSS)
 _UNIT_SQUARE = frozenset((dy, dx) for dy, dx, _ in SQUARE)
 
 
-def _iterate_structure(structure: Sequence[Offset2D], iterations: int):
+def _iterate_structure(structure: Sequence[Offset], iterations: int):
     """k-fold Minkowski self-dilation of the structuring element: the
     offset sum-set {s1 + ... + sk}. Iterated erosion by S equals ONE
     erosion by iterate(S, k) (Minkowski: E_S ∘ E_S = E_{S⊕S}), so k
@@ -87,7 +86,7 @@ def _iterate_structure(structure: Sequence[Offset2D], iterations: int):
     return [(dy, dx, 1.0) for dy, dx in sorted(acc)]
 
 
-def _composable(structure: Sequence[Offset2D], border_value: bool) -> bool:
+def _composable(structure: Sequence[Offset], border_value: bool) -> bool:
     cells = frozenset((dy, dx) for dy, dx, _ in structure)
     return not border_value and cells in (_UNIT_CROSS, _UNIT_SQUARE)
 

@@ -760,6 +760,18 @@ _PX3 = (
     "SUM(value) AS value FROM events GROUP BY 1, 2, 3)"
 )
 
+
+def _volume(spark, sf_dir):
+    """The dense 16^3 ``(z, y, x, value)`` volume folded from ``events`` —
+    the engine side of ``_PX3``."""
+    ev = load_table(spark, sf_dir, "events")
+    return ev.groupBy(
+        F.expr(f"CAST(event_id % {_VOL} AS INT)").alias("z"),
+        F.expr(f"CAST((event_id div {_VOL}) % {_VOL} AS INT)").alias("y"),
+        F.expr(f"CAST((event_id div {_VOL * _VOL}) % {_VOL} AS INT)").alias("x"),
+    ).agg(F.sum("value").alias("value"))
+
+
 # 3-D 6-neighbor Laplacian-style kernel (N-D generalization check)
 _K3D = (
     [(0, 0, 0, -6.0)]
@@ -790,15 +802,10 @@ def _filter3d_oracle() -> str:
           tags=("imaging", "ndfilters", "3d"))
 def filter_laplace_3d(spark, sf_dir):
     """The N-dimensional surface: a 3-D 6-neighbor Laplacian over a 16^3
-    volume through ``correlate_nd`` — the same pad-scatter plan at rank 3
+    volume through ``correlate`` — the same pad-scatter plan at rank 3
     (reference filters accept any rank; this grades ours past 2-D)."""
-    ev = load_table(spark, sf_dir, "events")
-    px3 = ev.groupBy(
-        F.expr(f"CAST(event_id % {_VOL} AS INT)").alias("z"),
-        F.expr(f"CAST((event_id div {_VOL}) % {_VOL} AS INT)").alias("y"),
-        F.expr(f"CAST((event_id div {_VOL * _VOL}) % {_VOL} AS INT)").alias("x"),
-    ).agg(F.sum("value").alias("value"))
-    out = ndfilters.correlate_nd(
+    px3 = _volume(spark, sf_dir)
+    out = ndfilters.correlate(
         px3, _K3D, (_VOL, _VOL, _VOL), mode="reflect"
     )
     return out.select("z", "y", "x", _eps_round("v", 4).alias("v"))
@@ -956,7 +963,7 @@ def filter_laplace_4d(spark, sf_dir):
     """RANK 4 — the any-rank claim made concrete past volumes: an
     8-neighbor Laplacian over an 8^4 (t, z, y, x) hypervolume, the shape
     of a (time, depth, height, width) microscopy sequence, through the
-    SAME generic ``correlate_nd`` pad-scatter plan as the 3-D query
+    SAME generic ``correlate`` pad-scatter plan as the 3-D query
     (boundary branches are the 2^N - 1 axis subsets; N only changes how
     many broadcast pad-map joins feed the one shuffle). Upstream accepts
     any-rank dask arrays; this grades ours at the rank where hand-rolled
@@ -968,7 +975,7 @@ def filter_laplace_4d(spark, sf_dir):
         F.expr(f"CAST((event_id div {_HV ** 2}) % {_HV} AS INT)").alias("y"),
         F.expr(f"CAST((event_id div {_HV ** 3}) % {_HV} AS INT)").alias("x"),
     ).agg(F.sum("value").alias("value"))
-    out = ndfilters.correlate_nd(
+    out = ndfilters.correlate(
         px4, _K4D, (_HV,) * 4, mode="reflect", coords=("t", "z", "y", "x")
     )
     return out.select("t", "z", "y", "x", _eps_round("v", 4).alias("v"))
@@ -1006,18 +1013,13 @@ def morph_erosion_3d(spark, sf_dir):
     |structure|) with constant-0 border — the counting identity that turns
     a boolean morphology into the same SUM aggregate every other N-D
     stencil uses (one shuffle, map-side combinable)."""
-    ev = load_table(spark, sf_dir, "events")
-    px3 = ev.groupBy(
-        F.expr(f"CAST(event_id % {_VOL} AS INT)").alias("z"),
-        F.expr(f"CAST((event_id div {_VOL}) % {_VOL} AS INT)").alias("y"),
-        F.expr(f"CAST((event_id div {_VOL * _VOL}) % {_VOL} AS INT)").alias("x"),
-    ).agg(F.sum("value").alias("value"))
+    px3 = _volume(spark, sf_dir)
     thr = px3.agg(F.avg("value").alias("_thr"))
     mask3 = px3.crossJoin(F.broadcast(thr)).select(
         "z", "y", "x",
         (F.col("value") > F.col("_thr")).cast("double").alias("value"),
     )
-    out = ndfilters.correlate_nd(
+    out = ndfilters.correlate(
         mask3, _ST3D, (_VOL, _VOL, _VOL), mode="constant", cval=0.0
     )
     return out.select("z", "y", "x", (F.col("v") == len(_ST3D)).alias("v"))
@@ -1047,13 +1049,8 @@ def filter_laplace_3d_constant(spark, sf_dir):
     """3-D Laplacian with ``mode='constant', cval=1.5`` — exercises the N-D
     constant-pad strips (round-1 gap: rank>2 constant padding with nonzero
     cval raised NotImplementedError)."""
-    ev = load_table(spark, sf_dir, "events")
-    px3 = ev.groupBy(
-        F.expr(f"CAST(event_id % {_VOL} AS INT)").alias("z"),
-        F.expr(f"CAST((event_id div {_VOL}) % {_VOL} AS INT)").alias("y"),
-        F.expr(f"CAST((event_id div {_VOL * _VOL}) % {_VOL} AS INT)").alias("x"),
-    ).agg(F.sum("value").alias("value"))
-    out = ndfilters.correlate_nd(
+    px3 = _volume(spark, sf_dir)
+    out = ndfilters.correlate(
         px3, _K3D, (_VOL, _VOL, _VOL), mode="constant", cval=1.5
     )
     return out.select("z", "y", "x", _eps_round("v", 4).alias("v"))
@@ -1324,7 +1321,7 @@ def fourier_gaussian_3d(spark, sf_dir):
         F.expr(f"CAST((event_id div {_VOL}) % {_VOL} AS INT)").alias("y"),
         F.expr(f"CAST((event_id div {_VOL * _VOL}) % {_VOL} AS INT)").alias("x"),
     ).agg(F.sum("value").alias("value"))
-    out = chunked.fourier_gaussian_3d(
+    out = chunked.fourier_gaussian(
         px3, sigma=1.0, shape=(_VOL, _VOL, _VOL), keys=["vol"]
     )
     return out.select("vol", "z", "y", "x", _eps_round("v", 4).alias("v"))
@@ -1373,14 +1370,10 @@ def affine_order1_3d(spark, sf_dir):
     """Rank-3 trilinear affine (zoom 0.7 + fractional translate) over the
     16^3 volume — the n-D surface of the interp gather-join pattern
     (upstream affine_transform accepts any rank)."""
-    ev = load_table(spark, sf_dir, "events")
-    px3 = ev.groupBy(
-        F.expr(f"CAST(event_id % {_VOL} AS INT)").alias("z"),
-        F.expr(f"CAST((event_id div {_VOL}) % {_VOL} AS INT)").alias("y"),
-        F.expr(f"CAST((event_id div {_VOL * _VOL}) % {_VOL} AS INT)").alias("x"),
-    ).agg(F.sum("value").alias("value"))
-    out = ndinterp.affine_transform_order1_3d(
-        px3, (0.7, 0.7, 0.7), (2.5, 1.25, 3.75), (_VOL, _VOL, _VOL)
+    px3 = _volume(spark, sf_dir)
+    zoom = [[0.7, 0.0, 0.0], [0.0, 0.7, 0.0], [0.0, 0.0, 0.7]]
+    out = ndinterp.affine_transform_order1(
+        px3, zoom, (2.5, 1.25, 3.75), (_VOL, _VOL, _VOL)
     )
     return out.select("z", "y", "x", _eps_round("v", 4).alias("v"))
 
@@ -2093,12 +2086,7 @@ def distance_transform_l1_3d(spark, sf_dir):
     O(voxels × mask) brute-force nearest search. Same dense-grid and
     integer-sentinel conventions as the 2-D form."""
     INF = 1 << 20
-    ev = load_table(spark, sf_dir, "events")
-    px3 = ev.groupBy(
-        F.expr(f"CAST(event_id % {_VOL} AS INT)").alias("z"),
-        F.expr(f"CAST((event_id div {_VOL}) % {_VOL} AS INT)").alias("y"),
-        F.expr(f"CAST((event_id div {_VOL * _VOL}) % {_VOL} AS INT)").alias("x"),
-    ).agg(F.sum("value").alias("value"))
+    px3 = _volume(spark, sf_dir)
     mean = px3.agg(F.avg("value").alias("mu"))
     g = px3.crossJoin(F.broadcast(mean)).select(
         "z", "y", "x",

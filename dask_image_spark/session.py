@@ -48,6 +48,18 @@ ENGINE_CONFS: dict[str, str] = {
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
 
+# The runtime-settable subset of ENGINE_CONFS that reads and plans depend on.
+# ``get_spark`` re-applies it on a reused session and
+# ``sources.tables.ensure_engine_confs`` on a session built elsewhere (a
+# default-built one would shuffle into 200 partitions and read parquet
+# timestamp[ns] as an error).
+RUNTIME_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.session.timeZone",
+    "spark.sql.shuffle.partitions",
+    "spark.sql.adaptive.enabled",
+)
+
 
 def default_master() -> str:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -73,11 +85,6 @@ def get_spark(
     for k, v in (extra_confs or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # Runtime-settable confs that must hold even on a reused session.
-    for k in (
-        "spark.sql.session.timeZone",
-        "spark.sql.shuffle.partitions",
-        "spark.sql.adaptive.enabled",
-    ):
+    for k in RUNTIME_CONFS:
         spark.conf.set(k, ENGINE_CONFS[k])
     return spark

@@ -19,6 +19,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dask_image_spark.session import ENGINE_CONFS, RUNTIME_CONFS
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -36,21 +38,14 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def ensure_engine_confs(spark: SparkSession) -> None:
-    """Pin the runtime-settable confs every read depends on.
+    """Pin the runtime-settable engine confs every read depends on
+    (``session.RUNTIME_CONFS``, values from ``session.ENGINE_CONFS``).
 
-    The driver may hand us a session built without the engine confs; all
-    four are runtime-settable and required for correct + fast reads.
+    A caller may hand us a session built without the engine confs.
     """
-    for k, v in (
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-        # a default-built session shuffles into 200 partitions — pure task
-        # overhead at harness scale (AQE coalescing still applies either way)
-        ("spark.sql.shuffle.partitions", "32"),
-        ("spark.sql.adaptive.enabled", "true"),
-    ):
+    for k in RUNTIME_CONFS:
         try:
-            spark.conf.set(k, v)
+            spark.conf.set(k, ENGINE_CONFS[k])
         except Exception:
             pass
 

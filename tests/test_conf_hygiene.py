@@ -98,3 +98,21 @@ def test_release_caches_leaves_no_tracked_storage(spark):
     assert not (after - before), (
         f"release_caches() left tracked entries in storage: {after - before}"
     )
+
+
+def test_shuffle_partitions_conf_reaches_reads(spark, monkeypatch):
+    """``load_table``'s conf pinning uses the session's engine value, so
+    SPARK_GRAFT_SHUFFLE_PARTITIONS is not reset to a hard-coded default on
+    the first read."""
+    from dask_image_spark import session
+    from dask_image_spark.sources.tables import ensure_engine_confs
+
+    key = "spark.sql.shuffle.partitions"
+    monkeypatch.setitem(session.ENGINE_CONFS, key, "7")
+    try:
+        ensure_engine_confs(spark)
+        assert spark.conf.get(key) == "7"
+    finally:
+        monkeypatch.undo()
+        ensure_engine_confs(spark)
+    assert spark.conf.get(key) == session.ENGINE_CONFS[key]

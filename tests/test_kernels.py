@@ -78,3 +78,38 @@ def test_stencil_rejects_oversized_kernel():
 
     with _pytest.raises(ValueError, match="kernel radius"):
         ndfilters.stencil_gather(None, [(9, 0, 1.0)], (8, 8))
+
+
+@pytest.mark.parametrize(
+    "offsets, shape",
+    [
+        (K.SOBEL_X, (6, 8, 8)),  # 2-D kernel, 3-D image
+        ([(0, 0, 1, 0, 1.0)], (8, 8)),  # 4-D kernel, 2-D image
+    ],
+)
+def test_stencil_rejects_kernel_of_wrong_rank(offsets, shape):
+    """A kernel whose offsets do not have one displacement per image axis
+    (plus the weight) is an error, not a silent misread of the weight as a
+    displacement or a dropped axis."""
+    from dask_image_spark.operators import ndfilters
+
+    with pytest.raises(ValueError, match="entries for shape"):
+        ndfilters.stencil_gather(None, offsets, shape)
+
+
+@pytest.mark.parametrize(
+    "matrix, offset, shape",
+    [
+        ([[1.0, 0.0], [0.0, 1.0]], None, (4, 4, 4)),  # 2x2 matrix, 3-D image
+        ([[1.0, 0.0, 0.0]] * 3, (0.0, 0.0), (4, 4, 4)),  # 2-D offset, 3-D image
+    ],
+)
+def test_affine_rejects_matrix_of_wrong_rank(spark, matrix, offset, shape):
+    """The any-rank order-1 affine needs an N x N matrix and a length-N
+    offset for N = ``len(shape)``; a mismatch raises before any plan is
+    built."""
+    from dask_image_spark.operators import ndinterp
+
+    px = spark.createDataFrame([(0, 0, 0, 1.0)], "z int, y int, x int, value double")
+    with pytest.raises(ValueError, match="do not match rank"):
+        ndinterp.affine_transform_order1(px, matrix, offset, shape)

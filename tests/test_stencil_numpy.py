@@ -62,6 +62,22 @@ def test_correlate_matches_numpy(spark, mode):
     np.testing.assert_allclose(got, want, rtol=1e-9, atol=1e-9)
 
 
+@pytest.mark.parametrize("mode", ["reflect", "mirror", "nearest", "wrap", "constant"])
+def test_correlate_per_axis_radius(spark, mode):
+    """Radius is checked and padded per axis: a y-only kernel of radius 10
+    is wider than the image (W=10) but fits its own axis (H=12)."""
+    k = [(dy, 0, 0.5 + 0.1 * dy) for dy in range(-10, 11)]
+    got = _collect_grid(
+        ndfilters.correlate(_px(spark), k, (H, W), mode=mode, cval=1.5)
+    )
+    if mode == "constant":
+        pad = np.pad(IMG, ((10, 10), (0, 0)), mode="constant", constant_values=1.5)
+    else:
+        pad = np.pad(IMG, ((10, 10), (0, 0)), mode=NP_PAD_MODE[mode])
+    want = sum(w * pad[10 + dy : 10 + dy + H] for dy, _, w in k)
+    np.testing.assert_allclose(got, want, rtol=1e-9, atol=1e-9)
+
+
 @pytest.mark.parametrize("mode", ["reflect", "constant"])
 def test_maximum_filter_matches_numpy(spark, mode):
     fp = [(dy, dx, 1.0) for dy in (-1, 0, 1) for dx in (-1, 0, 1)]
@@ -141,10 +157,10 @@ def test_binary_erosion_dilation_duality(spark):
     np.testing.assert_array_equal(ero.astype(bool), ~dil.astype(bool))
 
 
-@pytest.mark.parametrize("mode", ["reflect", "wrap", "nearest", "constant"])
+@pytest.mark.parametrize("mode", ["reflect", "mirror", "wrap", "nearest", "constant"])
 def test_correlate_nd_3d_matches_numpy(spark, mode):
-    """Rank-3 differential: correlate_nd vs dense numpy padding (constant
-    mode with nonzero cval covers the N-D pad strips added in round 2)."""
+    """Rank-3 differential: correlate on a volume vs dense numpy padding
+    (constant mode with nonzero cval covers the N-D pad strips)."""
     D = 6
     rng = np.random.default_rng(5)
     vol = np.round(rng.uniform(-2, 2, size=(D, D, D)), 3)
@@ -159,7 +175,7 @@ def test_correlate_nd_3d_matches_numpy(spark, mode):
                            (0, 0, -1), (0, 0, 1)]
     ]
     got = np.full((D, D, D), np.nan)
-    res = ndfilters.correlate_nd(px, k, (D, D, D), mode=mode, cval=1.25)
+    res = ndfilters.correlate(px, k, (D, D, D), mode=mode, cval=1.25)
     for r in res.collect():
         got[r["z"], r["y"], r["x"]] = r["v"]
     if mode == "constant":
